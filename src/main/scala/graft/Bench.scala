@@ -76,6 +76,9 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       System.gc()
     }
+    // keys whose run threw: still timed (so `total` keeps its meaning),
+    // but counted in the compact line and named on stderr
+    var nFailed = 0
     val results = SparkEntry.queries.toSeq
       .filter(kv => only.forall(_.contains(kv._1)))
       .sortBy(_._1)
@@ -93,7 +96,14 @@ object Bench {
       // toRdd.count() executes the FULL physical plan (projections,
       // sorts, windows) — a plain .count() would let Catalyst prune
       // every map-only query down to a parquet row count.
-      try { fn(spark, sfDir).queryExecution.toRdd.count() } catch { case _: Throwable => -1L }
+      // NonFatal only: an OOM/VMError must abort the run, not read as
+      // a fast key
+      try fn(spark, sfDir).queryExecution.toRdd.count()
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          nFailed += 1
+          System.err.println(s"[bench] $name failed: ${e.getClass.getName}")
+      }
       name -> (System.nanoTime() - t0) / 1e9
     }
     // Locale.ROOT: the f-interpolator honors the JVM default locale,
@@ -117,7 +127,7 @@ object Bench {
     )
     val slowest = results.sortBy(-_._2).take(25)
     val compact =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},""" +
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,""" +
         s""""queries":${mapJson(slowest)},"detail":"BENCH_DETAIL.json","sf":"$sfDir"}"""
     // stop BEFORE printing: the metric line must be the LAST stdout the
     // harness's bounded tail capture sees (spark.stop() can emit trailing

@@ -790,12 +790,11 @@ object KinesisLikePipeline {
       .option("rowsPerBatch", rowsPerBatch)
       .load()
     val answered = addAnswers(decodeEnvelope(records), keyCol = "seq")
-    // 16 prefixes at this volume — see contentAddressedSink's sizing note
     StreamIO
-      .contentAddressedSink(answered, outDir, s"$tmp/ckpt", availableNow = true, prefixChars = 1)
+      .contentAddressedSink(answered, outDir, s"$tmp/ckpt", availableNow = true)
       .awaitTermination()
-    // explicit schema pins key_prefix (a partition directory column) to
-    // string — inference would read all-digit prefixes back as ints
+    // explicit schema: an empty store still reads back with the full
+    // column set, and no per-batch footer read is needed to infer it
     StreamIO
       .readContentAddressed(
         spark,

@@ -10,14 +10,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * | reference                          | here                               |
   * | ---------------------------------- | ---------------------------------- |
   * | Kinesis producer (kinesis_stream/main.go:24-37) | [[mathProblemStream]] rate-source envelope stream |
-  * | S3 content-addressed put (adder-labma/adder.go:58-76) | [[contentAddressedSink]] prefix-partitioned parquet |
+  * | S3 content-addressed put (adder-labma/adder.go:58-76) | [[contentAddressedSink]] prefix-sorted parquet, one file per task per batch |
   * | SQS SendMessageBatch of 10 (lambda_page/lpage.go:135-146) | [[batchedQueueSink]] fixed-size JSON batch lines |
   *
   * The reference writes ONE S3 object PER RECORD — at 100 TB that is
   * billions of tiny puts, the canonical small-object anti-pattern. The
   * scalable translation keeps the content-addressed KEY (a column) but
-  * stores records in prefix-partitioned parquet: lookup by key is a
-  * partition-pruned scan, writes are batched columnar appends.
+  * stores records in prefix-sorted parquet: each write task emits one
+  * file per micro-batch, its rows clustered by key prefix, so writes
+  * are batched columnar appends.
   */
 object StreamIO {
 
@@ -43,29 +44,31 @@ object StreamIO {
         ).as("data")
       )
 
-  /** S3-analog sink: stream rows into parquet partitioned by the
-    * first `prefixChars` hex chars of `result_key`'s digest (the same
-    * fan-out trick S3 key design uses). Exactly-once: the parquet
-    * commit protocol dedups TASK retries, and each micro-batch owns
-    * its own overwrite-mode subdirectory so a BATCH replay after a
-    * crash-restart (sink write done, checkpoint commit lost)
-    * overwrites instead of double-appending — the same rule as the
-    * queue sink and the drain harness. Read the output back with
-    * [[readContentAddressed]] (per-batch dirs, prefix partitions
-    * inside).
+  /** S3-analog sink: stream rows into parquet with a `key_prefix`
+    * data column, the first hex char of `result_key`'s digest (the
+    * fan-out trick S3 key design uses), each write task's rows sorted
+    * by it. Exactly-once: the parquet commit protocol dedups TASK
+    * retries, and each micro-batch owns its own overwrite-mode
+    * subdirectory so a BATCH replay after a crash-restart (sink write
+    * done, checkpoint commit lost) overwrites instead of
+    * double-appending — the same rule as the queue sink and the drain
+    * harness. Read the output back with [[readContentAddressed]].
     *
-    * Size `prefixChars` to the volume: every micro-batch pays file +
-    * commit overhead per touched prefix directory (measured ~2.6 s
-    * per 256-way batch vs 0.6 s per 16-way at 10k rows), so use 1
-    * (16 prefixes) until per-prefix files reach a healthy parquet
-    * size, 2 (256) at production volume.
+    * Sizing: each micro-batch is one job of one stage — no shuffle, no
+    * per-prefix directories — and writes one file per task, so file
+    * count follows the batch's input partitions, not the key space.
+    * Fanning out by prefix directory (`partitionBy`) would cost a
+    * shuffle plus one small file and commit per touched prefix per
+    * batch: 16 files of ~156 rows for a 2,500-row batch, measured at
+    * about twice the per-batch time.
+    * At volumes where a task's file outgrows a healthy parquet size,
+    * cap it with `maxRecordsPerFile` rather than fanning out by prefix.
     */
   def contentAddressedSink(
       answered: DataFrame,
       outDir: String,
       checkpoint: String,
-      availableNow: Boolean = false,
-      prefixChars: Int = 2
+      availableNow: Boolean = false
   ): StreamingQuery = {
     val base = answered.writeStream
     (if (availableNow) base.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()) else base)
@@ -73,32 +76,27 @@ object StreamIO {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // strip the literal producer prefix only — md5 hex contains a-f,
         // so a greedy [a-z-]+ strip would also eat leading hex letters
-        // of the digest and collapse the 256 prefixes to ~160
+        // of the digest
         batch
           .withColumn(
             "key_prefix",
-            substring(regexp_replace(col("result_key"), "^(add|multi)-", ""), 1, prefixChars)
+            substring(regexp_replace(col("result_key"), "^(add|multi)-", ""), 1, 1)
           )
-          // cluster by prefix before the partitioned write: without it
-          // every TASK opens a file per prefix it touches (tasks ×
-          // prefixes tiny files per batch); with it each prefix's rows
-          // land in one task's one file
-          .repartition(col("key_prefix"))
+          // a task-local sort, not a shuffle: each task's one file is
+          // clustered by prefix, so once a file spans several row groups
+          // their min/max statistics let a key lookup skip most of them
+          .sortWithinPartitions(col("key_prefix"))
           .write
           .mode("overwrite")
-          .partitionBy("key_prefix")
           .parquet(s"$outDir/b$batchId")
       }
       .start()
   }
 
-  /** Read a [[contentAddressedSink]] output dir: per-batch `b<id>`
-    * subdirectories, each prefix-partitioned inside. Each batch dir is
-    * its own partition-discovery root (so `key_prefix` survives as a
-    * column — a recursive file lookup would drop it, and one glob read
-    * trips CONFLICTING_DIRECTORY_STRUCTURES), unioned by name. The
-    * driver-side dir listing is bounded by BATCH COUNT, never data
-    * volume — the content store's per-manifest-loop class.
+  /** Read a [[contentAddressedSink]] output dir: the per-batch `b<id>`
+    * subdirectories as one parquet scan. The driver-side dir listing is
+    * bounded by BATCH COUNT, never data volume — the content store's
+    * per-manifest-loop class.
     */
   def readContentAddressed(
       spark: SparkSession,
@@ -106,15 +104,14 @@ object StreamIO {
       schemaDdl: Option[String] = None
   ): DataFrame = {
     import org.apache.hadoop.fs.Path
-    def reader = schemaDdl.fold(spark.read)(s => spark.read.schema(s))
     // Hadoop FileSystem listing so hdfs://, s3a://, and file: URIs all
     // work — driver-local java.io.File would only see the local disk
     val root = new Path(outDir)
     val fs   = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // an empty micro-batch leaves a b<id> dir with only _SUCCESS
-    // (partitionBy with zero rows emits no part files) — schema
-    // inference would fail on it, so batch dirs without parquet part
-    // files are skipped; they carry no rows either way
+    // a b<id> dir with only _SUCCESS (a write that emitted no part
+    // files) carries no rows and is skipped, so a store with no rows
+    // yet takes the empty-result path below instead of failing schema
+    // inference
     def hasParquet(p: Path): Boolean = {
       val it = fs.listFiles(p, true)
       var found = false
@@ -148,7 +145,7 @@ object StreamIO {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL(ddl)
       )
-    } else dirs.map(reader.parquet(_)).reduce(_.unionByName(_))
+    } else schemaDdl.fold(spark.read)(spark.read.schema(_)).parquet(dirs.toIndexedSeq: _*)
   }
 
   /** SQS-analog sink: within each micro-batch, rows are grouped into

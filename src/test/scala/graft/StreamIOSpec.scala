@@ -10,7 +10,7 @@ class StreamIOSpec extends SparkSpecBase {
 
   private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
 
-  test("content-addressed sink lands decoded answers in prefix-partitioned parquet") {
+  test("content-addressed sink lands decoded answers in prefix-sorted parquet") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in  = MemoryStream[(String, String)]
@@ -33,6 +33,89 @@ class StreamIOSpec extends SparkSpecBase {
     assert(rows.filter(col("answer") === "30 + 12 = 42").count() == 1)
   }
 
+  /** ProblemSource → decode → add, as [[KinesisLikePipeline.problemStreamToStore]] wires it. */
+  private def answeredProblems(numRows: Long, numPartitions: Int, rowsPerBatch: Long) =
+    KinesisLikePipeline.addAnswers(
+      KinesisLikePipeline.decodeEnvelope(
+        spark.readStream
+          .format("graft.sources.ProblemSource")
+          .option("numRows", numRows)
+          .option("numPartitions", numPartitions)
+          .option("rowsPerBatch", rowsPerBatch)
+          .load()
+      ),
+      keyCol = "seq"
+    )
+
+  private def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  test("content-addressed sink writes one prefix-sorted file per task per batch, no prefix dirs") {
+    val root = Files.createTempDirectory("graft-s3-layout")
+    try {
+      val out = s"$root/store"
+      // 600 rows in 4 granules of 150; batches of 300 rows → 2 batches,
+      // each planned as 2 input partitions (2 write tasks)
+      StreamIO
+        .contentAddressedSink(answeredProblems(600, 4, 300), out, s"$root/ckpt", availableNow = true)
+        .awaitTermination()
+      val batchDirs = new java.io.File(out).listFiles().filter(_.getName.matches("b\\d+")).sortBy(_.getName)
+      assert(batchDirs.map(_.getName).toSeq == Seq("b0", "b1"))
+      batchDirs.foreach { b =>
+        val entries = b.listFiles()
+        assert(!entries.exists(_.isDirectory), s"subdirectory under $b: ${entries.toSeq}")
+        val parts = entries.filter(_.getName.endsWith(".parquet"))
+        assert(parts.nonEmpty && parts.length <= 2, s"$b: ${parts.length} part files for 2 write tasks")
+        parts.foreach { f =>
+          val prefixes = spark.read.parquet(f.toString).select("key_prefix").collect().map(_.getString(0)).toSeq
+          assert(prefixes.zip(prefixes.drop(1)).forall { case (a, b) => a <= b },
+            s"$f is not sorted by key_prefix")
+        }
+      }
+      val got = StreamIO.readContentAddressed(spark, out)
+        .select("seq", "num1", "num2", "answer", "result_key", "key_prefix")
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3), r.getString(4), r.getString(5)))
+        .sortBy(_._1)
+        .toSeq
+      val want = (0L until 600L).map { seq =>
+        val (n1, n2) = (seq % 100, (seq * 7 + 3) % 100)
+        val digest   = md5Hex(s"add-$seq")
+        (seq, n1, n2, s"$n1 + $n2 = ${n1 + n2}", s"add-$digest", digest.take(1))
+      }
+      assert(got == want)
+    } finally deleteTree(root)
+  }
+
+  test("content-addressed sink replays a batch whose commit was lost without duplicating rows") {
+    val root = Files.createTempDirectory("graft-s3-replay")
+    try {
+      val (out, ckpt) = (s"$root/store", s"$root/ckpt")
+      def run() = {
+        val q = StreamIO.contentAddressedSink(answeredProblems(600, 3, 200), out, ckpt, availableNow = true)
+        q.awaitTermination()
+        q
+      }
+      def counts = {
+        val rows = StreamIO.readContentAddressed(spark, out)
+        (rows.count(), rows.select("result_key").distinct().count())
+      }
+      run()
+      assert(counts == ((600L, 600L)))
+      // crash after the sink write but before the checkpoint commit: the
+      // last batch's offsets are logged, its commit marker is not
+      val commits = new java.io.File(s"$ckpt/commits")
+      val last    = commits.listFiles().map(_.getName).filter(_.matches("\\d+")).map(_.toLong).max
+      assert(last == 2L)
+      assert(new java.io.File(commits, last.toString).delete())
+      new java.io.File(commits, s".$last.crc").delete()
+      val replay = run()
+      assert(replay.recentProgress.exists(p => p.batchId == last && p.numInputRows == 200),
+        s"batch $last was not replayed: ${replay.recentProgress.map(p => (p.batchId, p.numInputRows)).toSeq}")
+      assert(counts == ((600L, 600L)))
+    } finally deleteTree(root)
+  }
+
   test("content-addressed read: empty sink output and row-less batch dirs degrade gracefully") {
     val out = tmp("graft-s3-empty")
     val ddl = "result_key STRING, answer STRING, key_prefix STRING"
@@ -41,9 +124,9 @@ class StreamIOSpec extends SparkSpecBase {
     assert(none.count() == 0 && none.columns.toSet == Set("result_key", "answer", "key_prefix"))
     // a missing root behaves the same (a sink that never committed)
     assert(StreamIO.readContentAddressed(spark, s"$out/never-created", Some(ddl)).count() == 0)
-    // an empty micro-batch leaves b<id> with only _SUCCESS (partitionBy
-    // with zero rows writes no part files) — it must be skipped, not
-    // fed to the per-dir reader where schema inference would throw
+    // a b<id> with only _SUCCESS (a write that emitted no part files)
+    // must be skipped, not fed to the reader where schema inference
+    // would throw
     val b0 = new java.io.File(s"$out/b0"); b0.mkdirs()
     new java.io.File(b0, "_SUCCESS").createNewFile()
     assert(StreamIO.readContentAddressed(spark, out, Some(ddl)).count() == 0)
